@@ -1299,60 +1299,55 @@ private[graft] trait CatalogCodec { this: QueriesBase =>
       // double-sum tails inside the tiny builds, and every equality
       // gate compares the reloaded index against its OWN in-session
       // twin built from the same centroids.
-      val scopedConfs = Seq(
-        "spark.sql.shuffle.partitions" -> "1",
-        "spark.sql.adaptive.enabled" -> "false")
-      val prevConfs = scopedConfs.map { case (key, _) =>
-        key -> s.conf.getOption(key) }
-      scopedConfs.foreach { case (key, v) => s.conf.set(key, v) }
       // (KMeans.fit's own tiny-shuffle scope writes the same values
       // concurrently from the pool threads — identical-value scopes
-      // compose safely, see graft.core.ScopedConf.)
-      // one thread per lifecycle (r19): the 26 chains are independent
-      // sequences of mostly single-task jobs, so the wall is per-job
-      // latency × chain length ÷ overlap — task slots (32 cores), not
-      // threads, are the binding resource, and at 12 threads the
-      // longest chains queue behind short ones. Measured (ProfileOne,
-      // 3 repeats each on a drifting box): job-seconds absorbed per
-      // wall-second rose ~5.5× → ~10× at pool 26 with the same ~1000
-      // job total; wall itself was inside the box's noise band.
-      // Guide §2.6: overlap independent jobs so the tail of one chain
-      // back-fills the others' idle slots.
-      val ts = thunks.result()
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(ts.size)
-      val rows = try {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        implicit val ec: ExecutionContext =
-          ExecutionContext.fromExecutor(pool)
-        // every thunk SETTLES before control reaches the finally
-        // (ADVICE r17): a bare Future.sequence returns on the first
-        // failure while sibling lifecycles are still mid save/load,
-        // and the rm() below would delete trees they are reading.
-        // Try-wrapping makes the sequence total; .map(_.get) then
-        // rethrows the first failure with the pool already quiet.
-        Await.result(
-          Future.sequence(ts.map(t => Future(scala.util.Try(t())))),
-          Duration.Inf).map(_.get)
-      } finally {
-        pool.shutdown()
-        prevConfs.foreach {
-          case (key, Some(v)) => s.conf.set(key, v)
-          case (key, None) => s.conf.unset(key)
+      // compose safely, see graft.core.ScopedConf.) The scope wraps
+      // pool creation too, so a failure anywhere restores both confs.
+      val rows = graft.core.ScopedConf.withConfs(s,
+          "spark.sql.shuffle.partitions" -> "1",
+          "spark.sql.adaptive.enabled" -> "false") {
+        // one thread per lifecycle (r19): the 26 chains are independent
+        // sequences of mostly single-task jobs, so the wall is per-job
+        // latency × chain length ÷ overlap — task slots (32 cores), not
+        // threads, are the binding resource, and at 12 threads the
+        // longest chains queue behind short ones. Measured (ProfileOne,
+        // 3 repeats each on a drifting box): job-seconds absorbed per
+        // wall-second rose ~5.5× → ~10× at pool 26 with the same ~1000
+        // job total; wall itself was inside the box's noise band.
+        // Guide §2.6: overlap independent jobs so the tail of one chain
+        // back-fills the others' idle slots.
+        val ts = thunks.result()
+        val pool = java.util.concurrent.Executors.newFixedThreadPool(ts.size)
+        try {
+          import scala.concurrent.{Await, ExecutionContext, Future}
+          import scala.concurrent.duration.Duration
+          implicit val ec: ExecutionContext =
+            ExecutionContext.fromExecutor(pool)
+          // every thunk SETTLES before control reaches the finally
+          // (ADVICE r17): a bare Future.sequence returns on the first
+          // failure while sibling lifecycles are still mid save/load,
+          // and the rm() below would delete trees they are reading.
+          // Try-wrapping makes the sequence total; .map(_.get) then
+          // rethrows the first failure with the pool already quiet.
+          Await.result(
+            Future.sequence(ts.map(t => Future(scala.util.Try(t())))),
+            Duration.Inf).map(_.get)
+        } finally {
+          pool.shutdown()
+          // hand back the shared storage slice and the 26 saved index
+          // trees — a long catalog session must not accumulate either
+          // (ADVICE r16: the cached slice otherwise contends with every
+          // downstream query's fixtures for the storage pool)
+          base.unpersist(false)
+          def rm(f: java.io.File): Unit = {
+            // listFiles is null on IO error/concurrent delete; an NPE
+            // here would mask the original exception (ADVICE r17)
+            if (f.isDirectory)
+              Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
+            f.delete(); ()
+          }
+          rm(rootPath.toFile)
         }
-        // hand back the shared storage slice and the 26 saved index
-        // trees — a long catalog session must not accumulate either
-        // (ADVICE r16: the cached slice otherwise contends with every
-        // downstream query's fixtures for the storage pool)
-        base.unpersist(false)
-        def rm(f: java.io.File): Unit = {
-          // listFiles is null on IO error/concurrent delete; an NPE
-          // here would mask the original exception (ADVICE r17)
-          if (f.isDirectory)
-            Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-          f.delete(); ()
-        }
-        rm(rootPath.toFile)
       }
       import s.implicits._
       rows.sortBy(_._1).toDF("family", "ok")

@@ -13,11 +13,14 @@ import graft.cluster.KMeans
   * exactly as the cold path does. */
 class KMeansWarmStartSpec extends SparkTestBase {
 
-  test("warm-started fit over duplicate-heavy degenerate data swaps to " +
-      "the unsampled prefix (training-set sizes prove it)") {
+  /** Warm-started fit of `k` centroids over 300 identical rows whose
+    * value-keyed hash subsample is empty; returns the summed cluster
+    * sizes and the fallback prefix length they must equal. */
+  private def degenerateWarmFit(nredo: Int): (Long, Int) = {
     import spark.implicits._
     val k = 4
-    val p = KMeans.Params(k = k, niter = 2, maxPointsPerCentroid = 2)
+    val p = KMeans.Params(k = k, niter = 2, maxPointsPerCentroid = 2,
+      nredo = nredo)
     val maxTrain = k * p.maxPointsPerCentroid // = 8
     // all rows IDENTICAL: the value-keyed hash subsample keeps either
     // every row or none. Scan deterministic seeds for a vector whose
@@ -41,9 +44,21 @@ class KMeansWarmStartSpec extends SparkTestBase {
     assert(sampled == 0L, "test setup: subsample must be empty")
     val warm = Array.tabulate(k)(j => v.map(_ + j * 0.5f))
     val m = KMeans.fit(df, "vec", p, init = Some(warm))
+    (m.sizes.sum, maxTrain)
+  }
+
+  test("warm-started fit over duplicate-heavy degenerate data swaps to " +
+      "the unsampled prefix (training-set sizes prove it)") {
+    val (trained, maxTrain) = degenerateWarmFit(nredo = 1)
     // the fallback prefix has maxTrain rows; an empty training set
     // would have crashed (or reported 0 assigned rows)
-    assert(m.sizes.sum == maxTrain)
+    assert(trained == maxTrain)
+  }
+
+  test("warm-started fit with nredo = 3 trains every redo on the " +
+      "fallback prefix") {
+    val (trained, maxTrain) = degenerateWarmFit(nredo = 3)
+    assert(trained == maxTrain)
   }
 
   test("warm-started fitEncoded over the same degenerate shape trains on " +
