@@ -874,8 +874,8 @@ private[graft] trait CatalogCodec { this: QueriesBase =>
     // sidecar state).
     ("fastscan_io_roundtrip", (s: SparkSession, dir: String) => {
       val path = s"target/fastscan_io_${math.abs(dir.hashCode)}"
-      graft.io.IndexIO.saveRq4Fs(rqfsRs(s, dir), path)
-      graft.io.IndexIO.loadRq4Fs(s, path).search(qDf(s, dir, 10), 10)
+      graft.io.IndexIO.save(rqfsRs(s, dir), path)
+      graft.io.IndexIO.load[graft.index.Rq4FastScanIndex](s, path).search(qDf(s, dir, 10), 10)
     },
       Some(rq4fsRescaleSql)),
 
@@ -1167,103 +1167,103 @@ private[graft] trait CatalogCodec { this: QueriesBase =>
       // the intended scheduler use — this is wall-clock packing, not
       // extra work)
       val thunks = Seq.newBuilder[() => (String, Boolean)]
-      def add(tag: String, save: String => Unit, twin: => DataFrame,
+      def add(tag: String, idx: => Any, twin: => DataFrame,
           run: Any => DataFrame): Unit = {
         thunks += (() => {
           val p = s"$root/$tag"
-          save(p)
+          IndexIO.save(idx, p)
           (IndexIO.reverseFactory(s, p),
-            setEq(run(IndexIO.load(s, p)), twin))
+            setEq(run(IndexIO.load[Any](s, p)), twin))
         })
       }
       lazy val ivf = IvfIndex.build(base, "id", "vec", nlist = 8, niter = 2)
-      add("ivfflat", IvfIndex.save(ivf, _), sr(ivf.search(q, 5, nprobe = 8)),
+      add("ivfflat", ivf, sr(ivf.search(q, 5, nprobe = 8)),
         a => sr(a.asInstanceOf[IvfIndex].search(q, 5, nprobe = 8)))
       lazy val sq = SqIndex.build(base, "id", "vec")
-      add("sq", IndexIO.saveSq(sq, _), sr(sq.search(q, 5)),
+      add("sq", sq, sr(sq.search(q, 5)),
         a => sr(a.asInstanceOf[SqIndex].search(q, 5)))
       lazy val pq = PqIndex.build(base, "id", "vec", m = 8, ksub = 16, niter = 2)
-      add("pq", IndexIO.savePq(pq, _), sr(pq.search(q, 5)),
+      add("pq", pq, sr(pq.search(q, 5)),
         a => sr(a.asInstanceOf[PqIndex].search(q, 5)))
       lazy val ivfpq = IvfPqIndex.build(base, "id", "vec", nlist = 4, m = 8,
         ksub = 16, niterCoarse = 2, niterPq = 2)
-      add("ivfpq", IndexIO.saveIvfPq(ivfpq, _),
+      add("ivfpq", ivfpq,
         sr(ivfpq.search(q, 5, nprobe = 4)),
         a => sr(a.asInstanceOf[IvfPqIndex].search(q, 5, nprobe = 4)))
       lazy val tl = TwoLayerIndex.build(base, "id", "vec", nlist = 4, m = 8,
         ksub = 16, niterCoarse = 2, niterPq = 2)
-      add("twolayer", IndexIO.saveTwoLayer(tl, _), tl.reconstruct,
+      add("twolayer", tl, tl.reconstruct,
         a => a.asInstanceOf[TwoLayerIndex].reconstruct)
       lazy val miq = MiqTwoLayerIndex.build(base, "id", "vec", mCoarse = 2,
         nbit = 4, m = 8, ksub = 16, niterCoarse = 2, niterPq = 2)
-      add("miq2layer", IndexIO.saveMiqTwoLayer(miq, _), miq.reconstruct,
+      add("miq2layer", miq, miq.reconstruct,
         a => a.asInstanceOf[MiqTwoLayerIndex].reconstruct)
       lazy val bivf = BinaryIvfIndex.buildFromVectors(base, "id", "vec",
         nlist = 4, niter = 2)
-      add("bivf", IndexIO.saveBinaryIvf(bivf, _),
+      add("bivf", bivf,
         sr(bivf.search(qc, 5, nprobe = 4)),
         a => sr(a.asInstanceOf[BinaryIvfIndex].search(qc, 5, nprobe = 4)))
       lazy val imi = ImiIndex.build(base, "id", "vec", ksub = 4, niter = 2)
-      add("imi", IndexIO.saveImi(imi, _), sr(imi.search(q, 5, nprobe = 16)),
+      add("imi", imi, sr(imi.search(q, 5, nprobe = 16)),
         a => sr(a.asInstanceOf[ImiIndex].search(q, 5, nprobe = 16)))
       lazy val imipq = ImiPqIndex.build(base, "id", "vec", ksub = 4, m = 8,
         pqKsub = 16, niterCoarse = 2, niterPq = 2)
-      add("imipq", IndexIO.saveImiPq(imipq, _),
+      add("imipq", imipq,
         sr(imipq.search(q, 5, nprobe = 16)),
         a => sr(a.asInstanceOf[ImiPqIndex].search(q, 5, nprobe = 16)))
       lazy val sh = IvfSpectralHash.build(base, "id", "vec", nlist = 4,
         nbit = 16, period = 1.0, thresholdType = "global", niter = 2)
-      add("ivfsh", IndexIO.saveSpectralHash(sh, _),
+      add("ivfsh", sh,
         sr(sh.search(q, 5, nprobe = 4)),
         a => sr(a.asInstanceOf[IvfSpectralHashIndex].search(q, 5, nprobe = 4)))
       lazy val pqfs = Pq4FastScanIndex.build(base, "id", "vec", m = 8, niter = 2)
-      add("pq4fs", IndexIO.savePq4Fs(pqfs, _), sr(pqfs.search(q, 5)),
+      add("pq4fs", pqfs, sr(pqfs.search(q, 5)),
         a => sr(a.asInstanceOf[Pq4FastScanIndex].search(q, 5)))
       lazy val ipqfs = IvfPq4FastScanIndex.build(base, "id", "vec", nlist = 4,
         m = 8, niterCoarse = 2, niterPq = 2)
-      add("ivfpq4fs", IndexIO.saveIvfPq4Fs(ipqfs, _),
+      add("ivfpq4fs", ipqfs,
         sr(ipqfs.search(q, 5, nprobe = 4)),
         a => sr(a.asInstanceOf[IvfPq4FastScanIndex].search(q, 5, nprobe = 4)))
       lazy val ipqfsr = IvfPq4FastScanRIndex.build(base, "id", "vec", nlist = 4,
         m = 8, niterCoarse = 2, niterPq = 2)
-      add("ivfpq4fsr", IndexIO.saveIvfPq4FsR(ipqfsr, _),
+      add("ivfpq4fsr", ipqfsr,
         sr(ipqfsr.search(q, 5, nprobe = 4)),
         a => sr(a.asInstanceOf[IvfPq4FastScanRIndex].search(q, 5, nprobe = 4)))
       lazy val rqfs = Rq4FastScanIndex.build(base, "id", "vec", levels = 2,
         niter = 2)
-      add("rq4fs", IndexIO.saveRq4Fs(rqfs, _), sr(rqfs.search(q, 5)),
+      add("rq4fs", rqfs, sr(rqfs.search(q, 5)),
         a => sr(a.asInstanceOf[Rq4FastScanIndex].search(q, 5)))
       lazy val irqfs = IvfRq4FastScanIndex.build(base, "id", "vec", nlist = 4,
         levels = 2, niterCoarse = 2, niter = 2)
-      add("ivfrq4fs", IndexIO.saveIvfRq4Fs(irqfs, _),
+      add("ivfrq4fs", irqfs,
         sr(irqfs.search(q, 5, nprobe = 4)),
         a => sr(a.asInstanceOf[IvfRq4FastScanIndex].search(q, 5, nprobe = 4)))
       lazy val irqfsr = IvfRq4FastScanRIndex.build(base, "id", "vec", nlist = 4,
         levels = 2, niterCoarse = 2, niter = 2)
-      add("ivfrq4fsr", IndexIO.saveIvfRq4FsR(irqfsr, _),
+      add("ivfrq4fsr", irqfsr,
         sr(irqfsr.search(q, 5, nprobe = 4)),
         a => sr(a.asInstanceOf[IvfRq4FastScanRIndex].search(q, 5, nprobe = 4)))
       lazy val ivfsq = IvfSqIndex.build(base, "id", "vec", nlist = 4, niter = 2,
         byResidual = true, qtype = "SQ8")
-      add("ivfsq", IndexIO.saveIvfSq(ivfsq, _),
+      add("ivfsq", ivfsq,
         sr(ivfsq.search(q, 5, nprobe = 4)),
         a => sr(a.asInstanceOf[IvfSqIndex].search(q, 5, nprobe = 4)))
       lazy val ivfrq = IvfRq.build(base, "id", "vec", nlist = 4, levels = 2,
         k = 16, niterCoarse = 2, niterRq = 2)
-      add("ivfrq", IndexIO.saveIvfRq(ivfrq, _),
+      add("ivfrq", ivfrq,
         sr(ivfrq.search(q, 5, nprobe = 4)),
         a => sr(a.asInstanceOf[IvfRqIndex].search(q, 5, nprobe = 4)))
       lazy val ivfrqn = new IvfRqNormIndex(ivfrq, ivfrq.codes, nonorm = true)
-      add("ivfrqnorm", IndexIO.saveIvfRqNorm(ivfrqn, _),
+      add("ivfrqnorm", ivfrqn,
         sr(ivfrqn.search(q, 5, nprobe = 4)),
         a => sr(a.asInstanceOf[IvfRqNormIndex].search(q, 5, nprobe = 4)))
-      add("bflat", IndexIO.saveBinaryFlat(bcodes, _), bcodes,
+      add("bflat", bcodes, bcodes,
         a => a.asInstanceOf[DataFrame])
       lazy val bh = BinaryHashIndex.build(bcodes, b = 6)
-      add("bhash", IndexIO.saveBinaryHash(bh, _), sr(bh.search(qc, 5)),
+      add("bhash", bh, sr(bh.search(qc, 5)),
         a => sr(a.asInstanceOf[BinaryHashIndex].search(qc, 5)))
       lazy val bmh = new BinaryMultiHashIndex(4, 8, bcodes)
-      add("bmultihash", IndexIO.saveBinaryMultiHash(bmh, _),
+      add("bmultihash", bmh,
         sr(bmh.search(qc, 5)),
         a => sr(a.asInstanceOf[BinaryMultiHashIndex].search(qc, 5)))
       // embeddings are d=64 (the znLat16 fixture's contract)
@@ -1272,18 +1272,18 @@ private[graft] trait CatalogCodec { this: QueriesBase =>
       lazy val th = Some(Array.tabulate(64)(i => 0.01 * (i % 5 - 2)))
       lazy val lsh = new LshIndex(rot, th, base.select(col("id"),
         LshIndex.signBits(rot, th, col("vec")).as("code")))
-      add("lsh", IndexIO.saveLsh(lsh, _), sr(lsh.search(q, 5)),
+      add("lsh", lsh, sr(lsh.search(q, 5)),
         a => sr(a.asInstanceOf[LshIndex].search(q, 5)))
       lazy val lat = Lattice.build(base, "id", "vec", nsq = 16, scaleNbit = 8,
         r2 = 10)
-      add("lattice", IndexIO.saveLattice(lat, _), lat.reconstruct,
+      add("lattice", lat, lat.reconstruct,
         a => a.asInstanceOf[LatticeIndex].reconstruct)
       lazy val mm = MinMaxCodec.buildIndex(base, "id", "vec", "SQ8",
         fp16Coeffs = false, niter = 2)
-      add("minmax", IndexIO.saveMinMax(mm, _), mm.reconstruct,
+      add("minmax", mm, mm.reconstruct,
         a => a.asInstanceOf[MinMaxIndex].reconstruct)
       lazy val rf = RefineFlatIndex.build(base, "id", "vec", kFactor = 3)
-      add("refineflat", IndexIO.saveRefineFlat(rf, _), sr(rf.search(q, 5)),
+      add("refineflat", rf, sr(rf.search(q, 5)),
         a => sr(a.asInstanceOf[RefineFlatIndex].search(q, 5)))
       base.count() // materialize the shared cache once, outside the pool
       // Scoped single-partition execution (r20, VERDICT r19 #3): this

@@ -6,8 +6,6 @@ import org.apache.spark.sql.graft.shim
 import graft.core.{Metric, TopKAgg}
 import graft.cluster.KMeans
 import graft.functions.{topk, vec_dist}
-import graft.io.JsonSidecar
-import graft.io.JsonSidecar.SidecarWriter
 
 /** IVF (inverted-file) index: the reference's scale path
   * (faiss/IndexIVF.cpp) re-expressed as a list_no-partitioned
@@ -348,7 +346,7 @@ class IvfIndex(
     new IvfIndex(d, metric, nlist, centroids,
       invlists.join(broadcast(ids), Seq("id"), "left_anti"))
 
-  def save(path: String): Unit = IvfIndex.save(this, path)
+  def save(path: String): Unit = graft.io.IndexIO.save(this, path)
 }
 
 object IvfIndex {
@@ -401,42 +399,15 @@ object IvfIndex {
         "merge_ondisk requires IDENTICAL centroids (one shared quantizer)")
     }
     val spark = h.invlists.sparkSession
-    save(new IvfIndex(h.d, h.metric, h.nlist, h.centroids,
+    graft.io.IndexIO.save(new IvfIndex(h.d, h.metric, h.nlist, h.centroids,
       indexes.map(_.invlists).reduce(_ unionByName _)), path)
-    load(spark, path)
+    graft.io.IndexIO.load[IvfIndex](spark, path)
   }
 
-  /** Persist as list_no-partitioned parquet + a one-row-per-centroid
-    * JSON sidecar (read_index/write_index analog,
-    * faiss/impl/index_write.cpp — format is parquet+JSON, not the
-    * fourcc binary). */
-  def save(idx: IvfIndex, path: String): Unit = {
-    val spark = idx.invlists.sparkSession
-    idx.invlists
-      .repartition(col("list_no"))
-      .write.mode("overwrite").partitionBy("list_no")
-      .parquet(s"$path/invlists")
-    import spark.implicits._
-    idx.centroids.zipWithIndex.toSeq
-      .map { case (c, i) => (i, c.toSeq, idx.d, idx.metric, idx.nlist) }
-      .toDF("list_no", "centroid", "d", "metric", "nlist")
-      .writeSidecar(s"$path/meta")
-    graft.io.IndexIO.saveKind(spark, path, "ivfflat")
-  }
-
-  def load(spark: SparkSession, path: String): IvfIndex = {
-    val meta = JsonSidecar.read(spark, s"$path/meta")
-      .select(col("list_no").cast("int"),
-        col("centroid").cast("array<float>"),
-        col("d").cast("int"), col("metric"), col("nlist").cast("int"))
-      .collect()
-    val d = meta.head.getInt(2)
-    val metric = meta.head.getString(3)
-    val nlist = meta.head.getInt(4)
-    val centroids = new Array[Array[Float]](nlist)
-    meta.foreach { r => centroids(r.getInt(0)) = r.getSeq[Float](1).toArray }
-    val invlists = spark.read.parquet(s"$path/invlists")
-      .select(col("id"), col("vec"), col("list_no").cast("int"))
-    new IvfIndex(d, metric, nlist, centroids, invlists)
-  }
+  // persistence is the graft.io.IndexIO registry's "ivfflat" entry
+  /** Forwards to `IndexIO.save`; kept because perfbench/, a separate build, calls it. */
+  def save(idx: IvfIndex, path: String): Unit = graft.io.IndexIO.save(idx, path)
+  /** Forwards to `IndexIO.load`; kept because perfbench/, a separate build, calls it. */
+  def load(spark: SparkSession, path: String): IvfIndex =
+    graft.io.IndexIO.load[IvfIndex](spark, path)
 }

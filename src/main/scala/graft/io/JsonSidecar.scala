@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.types._
 
 /** Driver-side JSON-lines sidecar IO for trained parameters.
@@ -23,13 +23,13 @@ import org.apache.spark.sql.types._
   * via the same `Float.toString`/`Double.toString` Jackson uses, null
   * fields omitted like `spark.sql.jsonGenerator.ignoreNullFields`),
   * so either side can be read/written by either implementation. The
-  * reader reproduces Spark's JSON schema inference on the subset of
-  * shapes sidecars use (flat rows of bool/long/double/string and
-  * one-level arrays, integral columns → LongType, fractional →
-  * DoubleType, field names sorted) and falls back to the real
-  * `spark.read.json` for anything else — including missing paths and
-  * empty datasets, so error semantics (AnalysisException on a missing
-  * kind tag / empty fp16 range) are exactly the Spark source's.
+  * reader takes the schema the caller expects and converts the parsed
+  * values directly, so it needs neither schema inference nor a query
+  * plan, and never falls back to `spark.read.json`: an empty sidecar
+  * (fp16's range) reads as zero rows, a missing path raises
+  * `FileNotFoundException` for the persisted component to judge
+  * (required or optional, see [[IndexIO]]), and any other shape is an
+  * `IllegalArgumentException`.
   */
 object JsonSidecar {
 
@@ -46,21 +46,25 @@ object JsonSidecar {
     (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
   }
 
-  /** Drop-in for `df.coalesce(1).write.mode("overwrite").json(path)`
-    * on a driver-local sidecar DataFrame. `collect()` on a
-    * LocalRelation plan returns rows without launching a job. */
-  def write(df: DataFrame, path: String): Unit = {
-    val rows = df.collect()
-    val schema = df.schema
+  /** Writes `rows` of `schema` as the sidecar at `path`, replacing it:
+    * the drop-in for `df.coalesce(1).write.mode("overwrite").json(path)`
+    * on rows the driver already holds, with no Spark job. */
+  def write(spark: SparkSession, schema: StructType, rows: Seq[Row], path: String): Unit = {
     val sb = new java.lang.StringBuilder(4096)
     rows.foreach { r => appendRow(sb, r, schema); sb.append('\n') }
-    val (fs, dir) = hadoopFs(df.sparkSession, path)
+    val (fs, dir) = hadoopFs(spark, path)
     fs.delete(dir, true)
     fs.mkdirs(dir)
     val out = fs.create(new org.apache.hadoop.fs.Path(dir, "part-00000.json"), true)
     try out.write(sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
     fs.create(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"), true).close()
+  }
+
+  /** Deletes `path` (recursively) if it exists. */
+  def remove(spark: SparkSession, path: String): Unit = {
+    val (fs, p) = hadoopFs(spark, path)
+    fs.delete(p, true)
   }
 
   private def appendRow(sb: java.lang.StringBuilder, r: Row, schema: StructType): Unit = {
@@ -117,118 +121,59 @@ object JsonSidecar {
     sb.append('"')
   }
 
-  /** Drop-in for `spark.read.json(path)` on a sidecar dataset: parses
-    * the JSON lines on the driver into a LocalRelation DataFrame whose
-    * schema matches Spark's own inference, so the callers' existing
-    * `.select(cast).collect()` chains run without a single job. Any
-    * shape outside the sidecar subset — missing path, empty dataset,
-    * nested objects, mixed types — falls back to `spark.read.json`
-    * verbatim (identical results AND identical error semantics). */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    // NonFatal only (ADVICE r19): an OOM/interrupt here must propagate,
-    // not get masked behind an unrelated spark.read.json failure.
-    val parsed: Option[Seq[com.fasterxml.jackson.databind.JsonNode]] = try {
-      val (fs, dir) = hadoopFs(spark, path)
-      val st =
-        try fs.getFileStatus(dir)
-        catch { case _: java.io.FileNotFoundException => null }
-      if (st == null || !st.isDirectory) None
-      else {
-        val files = fs.listStatus(dir).toSeq
-          .filter { s =>
-            val n = s.getPath.getName
-            s.isFile && !n.startsWith("_") && !n.startsWith(".")
-          }
-          .sortBy(_.getPath.getName)
-        val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-        val nodes = files.flatMap { f =>
-          val in = fs.open(f.getPath)
-          val lines =
-            try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-            finally in.close()
-          lines.filter(_.trim.nonEmpty).map(mapper.readTree)
-        }
-        if (nodes.isEmpty) None else Some(nodes)
-      }
-    } catch { case scala.util.control.NonFatal(_) => None }
-    parsed.flatMap(toLocalDf(spark, _))
-      .getOrElse(spark.read.json(path))
-  }
-
-  /** None when any field falls outside the supported subset — the
-    * caller then defers to the real JSON source. */
-  private def toLocalDf(spark: SparkSession,
-      nodes: Seq[com.fasterxml.jackson.databind.JsonNode])
-      : Option[DataFrame] = {
+  /** Reads the sidecar at `path` as rows of `schema`, converting each
+    * JSON value on the driver to its column's type the way a cast from
+    * Spark's inferred JSON type would (a whole number for an int or long
+    * column, any number for a float or double one) — no DataFrame, no
+    * query plan, no Spark job. An empty sidecar is zero rows. A missing
+    * `path` throws `java.io.FileNotFoundException`, for the persisted
+    * component to judge (required or optional, see [[IndexIO]]). A field
+    * a row omits reads as null, the writer's spelling of null; a column
+    * no row has, or a shape the writer never produces (nested objects,
+    * mismatched types, malformed lines), throws `IllegalArgumentException`. */
+  def read(spark: SparkSession, path: String, schema: StructType): Array[Row] = {
     import com.fasterxml.jackson.databind.JsonNode
-    // field -> inferred type; null = not yet known (all-null / empty
-    // arrays so far). Mirrors JsonInferSchema: integral -> Long,
-    // fractional (or mixed) -> Double, names sorted.
-    val types = scala.collection.mutable.LinkedHashMap.empty[String, DataType]
-    var ok = true
-    def infer(n: JsonNode): DataType = n match {
-      case _ if n.isBoolean => BooleanType
-      case _ if n.isIntegralNumber => LongType
-      case _ if n.isFloatingPointNumber => DoubleType
-      case _ if n.isTextual => StringType
-      case _ if n.isArray =>
-        var et: DataType = null
-        val it = n.elements()
-        while (it.hasNext && ok) {
-          val e = infer(it.next())
-          et = merge(et, e)
-        }
-        ArrayType(et) // null element type resolved at the end
-      case _ if n.isNull => null
-      case _ => ok = false; null
-    }
-    def merge(a: DataType, b: DataType): DataType = (a, b) match {
-      case (null, x) => x
-      case (x, null) => x
-      case (x, y) if x == y => x
-      case (LongType, DoubleType) | (DoubleType, LongType) => DoubleType
-      case (ArrayType(x, _), ArrayType(y, _)) => ArrayType(merge(x, y))
-      case _ => ok = false; null
-    }
-    nodes.foreach { n =>
-      if (!n.isObject) ok = false
-      else n.fieldNames().forEachRemaining { name =>
-        if (ok) types.update(name, merge(types.getOrElse(name, null),
-          infer(n.get(name))))
+    import scala.jdk.CollectionConverters._
+    val (fs, dir) = hadoopFs(spark, path)
+    require(fs.getFileStatus(dir).isDirectory, s"$path: a sidecar is a directory")
+    val files = fs.listStatus(dir).toSeq
+      .filter { s =>
+        val n = s.getPath.getName
+        s.isFile && !n.startsWith("_") && !n.startsWith(".")
+      }
+      .sortBy(_.getPath.getName)
+    // NaN/Infinity: Double.toString spells them bare, as the writer does
+    val mapper = com.fasterxml.jackson.databind.json.JsonMapper.builder()
+      .enable(com.fasterxml.jackson.core.json.JsonReadFeature.ALLOW_NON_NUMERIC_NUMBERS).build()
+    val nodes = files.flatMap { f =>
+      val in = fs.open(f.getPath)
+      val lines =
+        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
+        finally in.close()
+      lines.filter(_.trim.nonEmpty).map { l =>
+        try mapper.readTree(l)
+        catch { case e: com.fasterxml.jackson.core.JsonProcessingException =>
+          throw new IllegalArgumentException(s"$path: malformed sidecar line", e) }
       }
     }
-    // Spark infers all-empty arrays / all-null fields as StringType-ish;
-    // those shapes exist (Normalization-only transform rows) — resolve
-    // unknown leaves to StringType exactly like canonicalizeType.
-    def resolve(t: DataType): DataType = t match {
-      case null => StringType
-      case ArrayType(e, _) => ArrayType(resolve(e))
-      case x => x
-    }
-    if (!ok) return None
-    val fields = types.toSeq.map { case (n, t) => (n, resolve(t)) }.sortBy(_._1)
-    val schema = StructType(fields.map { case (n, t) => StructField(n, t) })
+    def unsupported(what: String) = throw new IllegalArgumentException(
+      s"$path: $what is not a sidecar shape JsonSidecar.write produces")
     def convert(n: JsonNode, t: DataType): Any =
       if (n == null || n.isNull) null
       else t match {
-        case BooleanType => n.asBoolean()
-        case LongType => n.asLong()
-        case DoubleType => n.asDouble()
-        case StringType => n.asText()
-        case ArrayType(et, _) =>
-          import scala.jdk.CollectionConverters._
-          n.elements().asScala.map(convert(_, et)).toSeq
-        case _ => null
+        case BooleanType if n.isBoolean => n.asBoolean()
+        case IntegerType if n.isIntegralNumber => n.asLong().toInt
+        case LongType if n.isIntegralNumber => n.asLong()
+        case FloatType if n.isNumber => n.asDouble().toFloat
+        case DoubleType if n.isNumber => n.asDouble()
+        case StringType if n.isTextual => n.asText()
+        case ArrayType(et, _) if n.isArray => n.elements().asScala.map(convert(_, et)).toSeq
+        case _ => unsupported(s"value $n for a $t column")
       }
-    val rows: java.util.List[Row] = new java.util.ArrayList[Row](nodes.size)
-    nodes.foreach { n =>
-      rows.add(Row.fromSeq(fields.map { case (name, t) => convert(n.get(name), t) }))
-    }
-    Some(spark.createDataFrame(rows, schema))
-  }
-
-  /** Import for the `.writeSidecar(path)` spelling at the save sites. */
-  implicit class SidecarWriter(private val df: DataFrame) extends AnyVal {
-    def writeSidecar(path: String): Unit = write(df, path)
+    nodes.foreach(n => if (!n.isObject) unsupported(s"line $n"))
+    val absent = schema.fieldNames.filterNot(f => nodes.exists(_.has(f)))
+    require(nodes.isEmpty || absent.isEmpty, s"$path: no column ${absent.mkString(", ")}")
+    nodes.map(n => Row.fromSeq(schema.fields.toSeq.map(f => convert(n.get(f.name), f.dataType))))
+      .toArray
   }
 }

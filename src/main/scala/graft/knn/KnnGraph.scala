@@ -52,7 +52,14 @@ object KnnGraph {
   /** NN-descent refinement (Dong et al., WWW'11): start from a cheap
     * initial graph, repeatedly propose neighbors-of-neighbors (in both
     * edge directions) and keep each node's best k. Converges in a few
-    * rounds on metric data; each round is two equi-joins + a top-k. */
+    * rounds on metric data; each round is two equi-joins + a top-k.
+    *
+    * Determinism precondition: the initial graph enumerates `base`'s
+    * ids in two jobs (per-partition counts, then offsets), so `base`
+    * must recompute with the same per-partition contents and order.
+    * A cached or file-backed `base` is safe; an uncached input derived
+    * through a shuffle is not (its partition contents or order may
+    * change between the two jobs) — cache it first. */
   def nnDescent(base: DataFrame, k: Int, iters: Int = 3,
       metric: String = "l2sq", idCol: String = "id", vecCol: String = "vec",
       seed: Long = 1234L): DataFrame = {

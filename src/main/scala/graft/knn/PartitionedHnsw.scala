@@ -24,6 +24,21 @@ import graft.functions.topk
   * unlike IVF pruning). Wall-clock beats the flat scan once |part| >>
   * ef·log|part| — the per-partition scan cost drops from O(|part|) to
   * O(ef·log|part|).
+  *
+  * Persistence ([[graft.io.IndexIO]]): the per-partition graphs (here,
+  * in [[PartitionedNsg]] and the NNDescent shards) are NOT persisted.
+  * They are ephemeral physical accelerators built inside mapPartitions
+  * over whatever partitioning the stored table has — the persistable
+  * state is the stored table itself (raw vectors, or SQ/PQ codes + their
+  * trained codec, each a persisted family). The reference serializes
+  * its graph because a single-node graph build is the expensive step
+  * it cannot parallelize (index_write.cpp write_HNSW); here the
+  * rebuild is an embarrassingly parallel per-partition pass over
+  * executor-sized shards, and pinning serialized adjacency to a
+  * particular partitioning would FORBID the repartitioning that a
+  * 1000-executor reload wants. Reloaded searches carry the same
+  * approximate-recall contract as a re-built graph — identical to the
+  * reference's own contract for add-after-load.
   */
 object PartitionedHnsw {
 

@@ -14,6 +14,9 @@ class GraftTestFs extends org.apache.hadoop.fs.RawLocalFileSystem {
 
 class JsonSidecarSpec extends SparkTestBase {
 
+  private def write(df: org.apache.spark.sql.DataFrame, path: String): Unit =
+    JsonSidecar.write(spark, df.schema, df.collect().toSeq, path)
+
   private def sampleDf = {
     import spark.implicits._
     Seq(
@@ -30,20 +33,20 @@ class JsonSidecarSpec extends SparkTestBase {
     val tmp = java.nio.file.Files.createTempDirectory("sidecar_scheme")
     try {
       val uri = s"grafttest:$tmp/meta"
-      JsonSidecar.write(sampleDf, uri)
+      write(sampleDf, uri)
       // the scheme's FS (RawLocal here) decided placement — the files
       // must exist where IT put them, with the Spark-source layout
       assert(java.nio.file.Files.isRegularFile(tmp.resolve("meta/part-00000.json")))
       assert(java.nio.file.Files.isRegularFile(tmp.resolve("meta/_SUCCESS")))
+      val expDf = sampleDf
+        .select(col("id"), col("s"), col("v").cast("array<double>"), col("flag"))
       // read back through the SAME scheme (driver-side parse path)
-      val back = JsonSidecar.read(spark, uri)
-        .select(col("id"), col("s"), col("v"), col("flag"))
-        .collect().map(_.toSeq.map {
+      val back = JsonSidecar.read(spark, uri, expDf.schema)
+        .map(_.toSeq.map {
           case q: scala.collection.Seq[_] => q.toSeq
           case x => x
         }).sortBy(_.toString())
-      val exp = sampleDf
-        .select(col("id"), col("s"), col("v").cast("array<double>"), col("flag"))
+      val exp = expDf
         .collect().map(_.toSeq.map {
           case q: scala.collection.Seq[_] => q.toSeq
           case x => x
@@ -65,7 +68,7 @@ class JsonSidecarSpec extends SparkTestBase {
     val tmp = java.nio.file.Files.createTempDirectory("sidecar_bytes")
     try {
       val df = sampleDf
-      JsonSidecar.write(df, s"$tmp/ours")
+      write(df, s"$tmp/ours")
       df.coalesce(1).write.mode("overwrite").json(s"$tmp/spark")
       def bytes(dir: java.nio.file.Path): String = {
         import scala.jdk.CollectionConverters._
@@ -76,6 +79,33 @@ class JsonSidecarSpec extends SparkTestBase {
           java.nio.charset.StandardCharsets.UTF_8)
       }
       assert(bytes(tmp.resolve("ours")) === bytes(tmp.resolve("spark")))
+    } finally graft.streaming.StreamingIngest.rmTree(tmp)
+  }
+
+  test("an empty sidecar (fp16's range) reads as zero rows with no Spark job") {
+    val tmp = java.nio.file.Files.createTempDirectory("sidecar_empty")
+    try {
+      import spark.implicits._
+      write(Seq.empty[(Int, Double)].toDF("dim", "vmin"), s"$tmp/range")
+      val sc = spark.sparkContext
+      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          jobs.incrementAndGet(); ()
+        }
+      }
+      sc.addSparkListener(listener)
+      try {
+        val schema = org.apache.spark.sql.types.StructType.fromDDL("dim INT, vmin DOUBLE")
+        assert(JsonSidecar.read(spark, s"$tmp/range", schema).isEmpty)
+        // flush the async listener bus with a sentinel job (RDD action =
+        // exactly one job), then assert it is the ONLY job seen
+        sc.parallelize(Seq(1), 1).count()
+        val deadline = System.nanoTime() + 5000000000L
+        while (jobs.get() < 1 && System.nanoTime() < deadline) Thread.sleep(20)
+        assert(jobs.get() == 1, s"reading an empty sidecar ran ${jobs.get() - 1} job(s)")
+      } finally sc.removeSparkListener(listener)
     } finally graft.streaming.StreamingIngest.rmTree(tmp)
   }
 }
